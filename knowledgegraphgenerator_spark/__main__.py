@@ -43,6 +43,8 @@ import sys
 
 
 def main(argv: list[str] | None = None, spark=None) -> int:
+    from knowledgegraphgenerator_spark.operators.linking import STRATEGIES
+
     ap = argparse.ArgumentParser(prog="knowledgegraphgenerator_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
@@ -61,8 +63,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     corpus.add_argument("--output", required=True)
     corpus.add_argument("--language", default="en")
     corpus.add_argument("--resume-root", default=None)
-    corpus.add_argument("--linking", default="auto",
-                        choices=["auto", "broadcast", "blocked"])
+    corpus.add_argument("--linking", default="auto", choices=STRATEGIES)
     corpus.add_argument(
         "--dedup", default="none",
         choices=["none", "exact", "chain"],
@@ -103,8 +104,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     st.add_argument("--output", required=True)
     st.add_argument("--checkpoint", required=True)
     st.add_argument("--language", default="en")
-    st.add_argument("--linking", default="auto",
-                    choices=["auto", "broadcast", "blocked"])
+    st.add_argument("--linking", default="auto", choices=STRATEGIES)
 
     ing = sub.add_parser(
         "ingest",
@@ -304,48 +304,17 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             from knowledgegraphgenerator_spark.core.stopwords import (
                 resolve_stop_words,
             )
+            from knowledgegraphgenerator_spark.streaming.incremental import (
+                incremental_kg_triples_linked,
+            )
 
-            stops = resolve_stop_words(args.language, None)
-            if args.linking == "auto":
-                # probe the artifact once; safe at any dictionary size
-                from knowledgegraphgenerator_spark.streaming.incremental import (  # noqa: E501
-                    incremental_kg_triples_auto,
-                )
-
-                chosen = incremental_kg_triples_auto(
-                    spark, args.source, args.dictionary, stops,
-                    args.output, args.checkpoint,
-                )
-                if args.v:
-                    print(f"stream linking strategy: {chosen}")
-            elif args.linking == "blocked":
-                from knowledgegraphgenerator_spark.operators.phrases import (
-                    load_dictionary_frames,
-                )
-                from knowledgegraphgenerator_spark.streaming.incremental import (
-                    incremental_kg_triples_blocked,
-                )
-
-                incremental_kg_triples_blocked(
-                    spark, args.source,
-                    load_dictionary_frames(spark, args.dictionary),
-                    stops, args.output, args.checkpoint,
-                )
-            else:
-                from knowledgegraphgenerator_spark.operators.phrases import (
-                    load_ranked_dictionary,
-                )
-                from knowledgegraphgenerator_spark.streaming.incremental import (
-                    incremental_kg_triples,
-                )
-
-                dictionary = load_ranked_dictionary(
-                    spark, args.dictionary, stops
-                )
-                incremental_kg_triples(
-                    spark, args.source, dictionary, args.output,
-                    args.checkpoint,
-                )
+            chosen = incremental_kg_triples_linked(
+                spark, args.source, args.dictionary,
+                resolve_stop_words(args.language, None),
+                args.output, args.checkpoint, args.linking,
+            )
+            if args.v:
+                print(f"stream linking strategy: {chosen}")
         elif args.cmd == "ingest":
             from knowledgegraphgenerator_spark.streaming.incremental import (
                 incremental_ingest_dedup,

@@ -77,29 +77,6 @@ def lemmatize_sentence_udf(text: pd.Series) -> pd.Series:
 
 
 @pandas_udf(ArrayType(StringType()))
-def lemmatize_tokens_udf(tokens: pd.Series) -> pd.Series:
-    return tokens.map(
-        lambda ts: [noun_lemma(t) for t in ts] if ts is not None else []
-    )
-
-
-@pandas_udf(ArrayType(StringType()))
-def lemmatize_lang_udf(text: pd.Series, lang: pd.Series) -> pd.Series:
-    """N3 per-language lemma/stem dispatch (reference Lemmatize.py:140-194):
-    es/fr/de/pt/it Snowball-style stems, zh char-split, en noun lemmas,
-    everything else tokenize-only (core/stemmers.py)."""
-    from knowledgegraphgenerator_spark.core.stemmers import lemmatize_for_lang
-
-    return pd.Series(
-        [
-            lemmatize_for_lang(s or "", g or "en")
-            for s, g in zip(text, lang)
-        ],
-        index=text.index,
-    )
-
-
-@pandas_udf(ArrayType(StringType()))
 def match_tokens_udf(text: pd.Series) -> pd.Series:
     """Match-doc token stream: tokenize (whitespace + Treebank splits)
     then per-token noun lemma — the token form of lemmatize_sentence_udf,

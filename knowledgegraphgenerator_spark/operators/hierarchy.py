@@ -198,6 +198,9 @@ def optimise_graph(
 
     Shuffle budget: 1 corpus aggregation + 1 corpus join-back (strategy
     left to AQE) vs the naive two passes of each.
+
+    ``onto`` is read twice, so it is persisted (in place); the caller
+    releases it with ``onto.unpersist()`` after its terminal action.
     """
     onto = onto.persist()
     w = _with_path(onto)

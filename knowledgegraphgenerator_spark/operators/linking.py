@@ -31,13 +31,15 @@ by the same kg_triples DuckDB oracle (queries.py:kg_triples_blocked).
 
 Shuffle budget of the fallback: 1 token-key equi-join (shuffle hash, AQE
 skew-join eligible) + 1 groupBy(doc_id) collect + 1 doc join-back — vs
-zero shuffles for the broadcast path. ``link_terms_auto`` picks per run:
-broadcast below ``broadcast_term_limit`` dictionary entries, blocked
-above.
+zero shuffles for the broadcast path. ``choose_linking`` is the one
+place the matcher is chosen, for every caller (batch pipeline, staged
+runner, stream, CLI): 'auto' picks broadcast up to
+``broadcast_term_limit`` dictionary entries, blocked above.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Iterator
 
 import pandas as pd
@@ -48,10 +50,52 @@ from knowledgegraphgenerator_spark.core.matching import (
     RankedDictionary,
     assign_terms,
 )
+from knowledgegraphgenerator_spark.operators import phrases
+
+STRATEGIES = ("auto", "broadcast", "blocked")
 
 _ONTOLOGY_SCHEMA = (
     "doc_id long, question string, terms array<string>, tags array<string>"
 )
+
+
+def choose_linking(
+    frames: dict[str, DataFrame],
+    stop_tokens: frozenset[str],
+    strategy: str = "auto",
+    broadcast_term_limit: int = 2_000_000,
+) -> tuple[RankedDictionary | None, dict[str, int]]:
+    """Broadcast-vs-blocked decision over the dictionary sections
+    ``frames`` (term, cnt, first_seen) -> ``(dictionary, sizes)``.
+
+    ``dictionary`` is the ranked dictionary for ``link_terms``, or
+    ``None`` when ``link_terms_blocked`` must run. 'broadcast' collects
+    the whole dictionary; 'blocked' runs no job; 'auto' collects at most
+    ``broadcast_term_limit + 1`` rows in ONE job — if everything fit,
+    these ARE the dictionary rows (choosing costs no extra job); if not,
+    only limit+1 bounded rows reached the driver.
+
+    ``sizes`` (entries per section): exact when a dictionary is
+    returned; on auto -> blocked, counts over the truncated probe, so
+    each is <= the true section size; ``{}`` on explicit 'blocked'.
+    """
+    if strategy not in STRATEGIES:
+        raise ValueError(f"unknown linking strategy: {strategy!r}")
+    if strategy == "blocked":
+        return None, {}
+    union = phrases.union_dictionary_frames(frames)
+    if strategy == "broadcast":
+        rows = union.collect()
+    else:
+        rows = union.limit(broadcast_term_limit + 1).collect()
+        if len(rows) > broadcast_term_limit:
+            return None, dict(Counter(r["kind"] for r in rows))
+    dictionary = phrases.ranked_dictionary_from_rows(rows, stop_tokens)
+    return dictionary, {
+        "phrases": len(dictionary.phrases),
+        "unigrams": len(dictionary.unigrams),
+        "verbs": len(dictionary.verbs),
+    }
 
 
 def link_terms(

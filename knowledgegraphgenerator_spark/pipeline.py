@@ -31,6 +31,9 @@ from knowledgegraphgenerator_spark.operators import linking as linking_ops
 class KGResult:
     ontology: DataFrame
     triples: DataFrame
+    # entries per dictionary section: exact on the broadcast branch,
+    # counts over the truncated limit+1 probe on auto -> blocked (each
+    # <= the true size), {} on explicit 'blocked' (no job counts them)
     dictionary_sizes: dict[str, int] = field(default_factory=dict)
     _cleanup: list = field(default_factory=list, repr=False)
 
@@ -153,9 +156,8 @@ def run_pipeline(
     the cluster and links via the token-block equi-join
     (operators/linking.py:link_terms_blocked — right when the dictionary
     outgrows broadcast); 'auto' counts the dictionary once and picks
-    (<= broadcast_term_limit entries -> broadcast)."""
-    if linking not in ("auto", "broadcast", "blocked"):
-        raise ValueError(f"unknown linking strategy: {linking!r}")
+    (<= broadcast_term_limit entries -> broadcast). The choice is
+    operators/linking.py:choose_linking."""
     stops = resolve_stop_words(lang, stop_words)
     # Small-file inputs (one parquet footer) arrive as 1 split — fan out
     # to the cluster's parallelism or every Arrow stage runs on one core.
@@ -172,7 +174,7 @@ def run_pipeline(
     # cache them too or the chunker pass re-runs per action.
     cleanup: list = []
     normalized = normalized.persist()
-    cleanup.append(lambda: normalized.unpersist())
+    cleanup.append(normalized.unpersist)
     features = phrases.extract_doc_features(
         normalized, stops, id_col="doc_id", text_col="norm_text"
     ).persist()
@@ -185,59 +187,26 @@ def run_pipeline(
     frames = phrases.sections_from_counted(counted)
     frames["phrases"] = phrases.dedup_equal_count_phrases(frames["phrases"])
 
-    use_blocked = linking == "blocked"
-    dictionary_sizes: dict[str, int] = {}
-    probe_rows = None
-    if linking == "auto":
-        # ONE job decides the strategy AND (when broadcast wins) already
-        # delivers the dictionary: collect limit+1 rows — if everything
-        # fit, these ARE the dictionary rows; if the limit was exceeded,
-        # we learned "too big for broadcast" having moved only limit+1
-        # bounded rows to the driver.
-        probe_rows = (
-            phrases.union_dictionary_frames(frames)
-            .limit(broadcast_term_limit + 1)
-            .collect()
-        )
-        use_blocked = len(probe_rows) > broadcast_term_limit
-
-    if use_blocked:
+    dictionary, dictionary_sizes = linking_ops.choose_linking(
+        frames, stops, linking, broadcast_term_limit
+    )
+    if dictionary is None:
         # blocked linking reads features/counted through the frames —
         # their caches are released by KGResult.close(), not here
-        cleanup.append(lambda: features.unpersist())
-        cleanup.append(lambda: counted.unpersist())
-        onto = linking_ops.link_terms_blocked(
+        cleanup += [features.unpersist, counted.unpersist]
+        linked = linking_ops.link_terms_blocked(
             normalized, frames, stops,
-            id_col="doc_id", raw_col="question", norm_col="norm_text",
-            prune_doc_keys=blocked_prune,
-            cleanup=cleanup,
+            prune_doc_keys=blocked_prune, cleanup=cleanup,
         )
-        if probe_rows is not None:
-            sizes: dict[str, int] = {}
-            for r in probe_rows:
-                sizes[r["kind"]] = sizes.get(r["kind"], 0) + 1
-            dictionary_sizes = sizes  # >= truth on the truncated probe
     else:
-        if probe_rows is not None:
-            dictionary = phrases.ranked_dictionary_from_rows(
-                probe_rows, stops
-            )
-        else:
-            dictionary = phrases.collect_ranked_dictionary(frames, stops)
         features.unpersist()
         counted.unpersist()
-        dictionary_sizes = {
-            "phrases": len(dictionary.phrases),
-            "unigrams": len(dictionary.unigrams),
-            "verbs": len(dictionary.verbs),
-        }
-        onto = linking_ops.link_terms(
-            normalized, dictionary,
-            id_col="doc_id", raw_col="question", norm_col="norm_text",
-        )
-    # persisted: triples reads the ontology from three plan branches
-    onto = hierarchy.optimise_graph(onto, primaries).persist()
-    cleanup.append(lambda: onto.unpersist())
+        linked = linking_ops.link_terms(normalized, dictionary)
+    # optimise_graph persists the linked frame it reads twice; the
+    # ontology is persisted because triples reads it from three plan
+    # branches. KGResult.close() releases both.
+    onto = hierarchy.optimise_graph(linked, primaries).persist()
+    cleanup += [linked.unpersist, onto.unpersist]
     trip = triples.build_triples(onto, synonyms=synonyms, altq=altq)
     return KGResult(
         ontology=onto,

@@ -311,7 +311,8 @@ def run_resumable_pipeline(
     the DEPLOYMENT entry point would OOM the driver exactly at the
     10^12-doc design point it exists for); 'auto' probes once
     (limit+1 collect — the probe rows double as the dictionary when
-    broadcast wins, so choosing costs no extra job)."""
+    broadcast wins, so choosing costs no extra job). The choice is
+    operators/linking.py:choose_linking."""
     from knowledgegraphgenerator_spark.core.stopwords import resolve_stop_words
     from knowledgegraphgenerator_spark.operators import (
         hierarchy, linking, phrases, triples,
@@ -355,45 +356,34 @@ def run_resumable_pipeline(
         lambda c: phrases.sections_from_counted(c)["verbs"],
         input_df=dict_counts,
     )
-    if linking_strategy not in ("auto", "broadcast", "blocked"):
-        raise ValueError(f"unknown linking strategy: {linking_strategy!r}")
     frames = {
         "phrases": phrases_df, "unigrams": unigrams_df, "verbs": verbs_df
     }
-    use_blocked = linking_strategy == "blocked"
-    probe_rows = None
-    if linking_strategy == "auto":
-        probe_rows = (
-            phrases.union_dictionary_frames(frames)
-            .limit(broadcast_term_limit + 1)
-            .collect()
-        )
-        use_blocked = len(probe_rows) > broadcast_term_limit
+    dictionary, _ = linking.choose_linking(
+        frames, stops, linking_strategy, broadcast_term_limit
+    )
+    # the link stage's caches (optimise_graph's persisted input, plus the
+    # blocked matcher's tokenized docs and stop-set broadcast) are
+    # released once the ontology stage has committed
+    cleanup: list = []
 
-    if use_blocked:
-        def link(n):
-            return linking.link_terms_blocked(
-                n, frames, stops,
-                id_col="doc_id", raw_col="question", norm_col="norm_text",
-            )
-    else:
-        if probe_rows is not None:
-            dictionary = phrases.ranked_dictionary_from_rows(
-                probe_rows, stops
+    def link_and_optimise(n):
+        if dictionary is None:
+            linked = linking.link_terms_blocked(
+                n, frames, stops, cleanup=cleanup
             )
         else:
-            dictionary = phrases.collect_ranked_dictionary(frames, stops)
+            linked = linking.link_terms(n, dictionary)
+        cleanup.append(linked.unpersist)
+        return hierarchy.optimise_graph(linked)
 
-        def link(n):
-            return linking.link_terms(
-                n, dictionary, "doc_id", "question", "norm_text"
-            )
-
-    ontology = runner.run_stage(
-        "ontology",
-        lambda n: hierarchy.optimise_graph(link(n)),
-        input_df=normalized,
-    )
+    try:
+        ontology = runner.run_stage(
+            "ontology", link_and_optimise, input_df=normalized
+        )
+    finally:
+        for fn in cleanup:
+            fn()
     return runner.run_stage(
         "triples",
         lambda o: triples.build_triples(o),

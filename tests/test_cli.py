@@ -122,14 +122,24 @@ def test_cli_dictionary_and_stream(spark, tmp_path):
     assert loaded.unigrams == direct.unigrams
     assert loaded.verbs == direct.verbs
 
-    out = str(tmp_path / "trip_out")
-    rc = main(
-        ["stream", "--source", src, "--dictionary", dict_path,
-         "--output", out, "--checkpoint", str(tmp_path / "ckpt")],
-        spark=spark,
-    )
-    assert rc == 0
-    assert spark.read.parquet(out).count() > 0
+    def stream(*linking):
+        out = str(tmp_path / "_".join(("trip_out",) + linking))
+        rc = main(
+            ["stream", "--source", src, "--dictionary", dict_path,
+             "--output", out, "--checkpoint", out + "_ckpt", *linking],
+            spark=spark,
+        )
+        assert rc == 0
+        return sorted(
+            tuple(r) for r in spark.read.parquet(out)
+            .select("subj", "pred", "obj").collect()
+        )
+
+    default = stream()
+    assert default
+    # the explicit strategies emit the default auto stream's triples
+    assert stream("--linking", "broadcast") == default
+    assert stream("--linking", "blocked") == default
 
 
 def test_cli_corpus_dedup_chain(spark, tmp_path):
